@@ -24,8 +24,10 @@ object GraftSession {
   def configure(b: SparkSession.Builder, cores: Int): SparkSession.Builder =
     b.config("spark.sql.shuffle.partitions", cores.toString)
       .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("GRAFT_AQE", "true")) // A/B lever, default on
+      // AQE off measured no better beyond noise (perfbench, 3 seeds per
+      // workload; medians in CHANGES.md), and the cached-scan reuse
+      // repair and the coalescing floor below are AQE rules
+      .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
       // AQE's parallelismFirst coalescing respects only minPartitionSize
       // (it ignores the advisory target), and the 1 MiB default collapses
@@ -36,8 +38,7 @@ object GraftSession {
       // At cluster scale partitions sit near the 64 MiB advisory size, so
       // a 64 KiB floor never binds — this is purely the small-shuffle
       // parallelism guard, the AQE twin of Parallelism.widen's scan floor.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize",
-        sys.env.getOrElse("GRAFT_MIN_PART", "64k")) // A/B lever
+      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
       .config("spark.sql.adaptive.skewJoin.enabled", "true")
       .config("spark.sql.sources.partitionOverwriteMode", "dynamic")
       .config("spark.sql.files.maxPartitionBytes", "268435456")

@@ -507,39 +507,15 @@ object PromOps {
 
   /** `deriv`/`predict_linear` at every grid point: the per-window
     * least-squares slope with sample times centered on each window's
-    * own start (x = e − (g − w), small exact integers), the same
-    * decimal-sum regression as [[derivOverRange]] keyed by (skey, g).
+    * own start (x = e − (g − w), small exact integers): the
+    * [[derivFromSamples]] regression keyed by (skey, g).
     * One map-side-combinable aggregation, no window pass.
     */
   def derivOverGrid(metrics: DataFrame, metricName: String, g0: Long,
       g1: Long, stepSec: Long, windowSec: Long,
-      predictSec: Option[Double]): DataFrame = {
-    val wg = windowGrid(metrics, metricName, g0, g1, stepSec, windowSec)
-      .select(col("skey"), col("g"),
-        (col("e") - (col("g") - windowSec)).as("x"),
-        col("value").cast("decimal(20,6)").as("vd"))
-    val agg = wg.groupBy(col("skey"), col("g")).agg(
-      count(lit(1)).as("n"),
-      sum(col("x").cast("decimal(38,0)")).as("sx"),
-      sum((col("x") * col("x")).cast("decimal(38,0)")).as("sxx"),
-      sum(col("vd")).as("sv"),
-      sum(col("vd") * col("x")).as("sxv"))
-    val num = (col("n") * col("sxv") - col("sx") * col("sv")).cast("double")
-    val den = (col("n") * col("sxx") - col("sx") * col("sx")).cast("double")
-    val withSlope = agg
-      .filter(col("n") * col("sxx") - col("sx") * col("sx") > 0)
-      .withColumn("slope", num / den)
-    predictSec match {
-      case None =>
-        withSlope.select(col("skey"), col("g"), col("slope").as("value"))
-      case Some(d) =>
-        val intercept =
-          (col("sv").cast("double") - col("slope") * col("sx").cast("double")) /
-            col("n")
-        withSlope.select(col("skey"), col("g"),
-          (intercept + col("slope") * lit(windowSec + d)).as("value"))
-    }
-  }
+      predictSec: Option[Double]): DataFrame =
+    derivFromSamples(windowGrid(metrics, metricName, g0, g1, stepSec, windowSec),
+      col("g") - windowSec, windowSec, predictSec, extraKeys = Seq("g"))
 
   /** `holt_winters(x[w], sf, tf)`: double exponential smoothing over each
     * series' time-ordered window samples — Prometheus's algorithm

@@ -746,58 +746,26 @@ object AnalyticsQueries {
       var s = streamSessionMemo.get(spark)
       if (s == null) {
         s = spark.newSession()
-        // 1, not 32 (or even 4 — measured: 4 is net-slower across the
-        // nine gates even at sf0.1): fixture micro-batches are small
-        // enough that per-partition state-store commit overhead
-        // dominates — the stream-stream join keeps 4 stores PER
-        // partition, so partition count multiplies checkpoint fsyncs,
-        // not throughput. Production sizing is the opposite
-        // (partitions ≈ cores); results are partition-count-independent
-        // either way (every gate hash-matches at all three SFs).
-        // GRAFT_STREAM_PARTS: A/B lever (round 19) — the measurement
-        // above predates the NIO checkpoint manager + checksum disable,
-        // which cut the per-partition commit tax ~300×; re-measured
-        // below.
-        s.conf.set("spark.sql.shuffle.partitions",
-          sys.env.getOrElse("GRAFT_STREAM_PARTS", "1"))
-        // NIO atomic writes for the local checkpoints (round 18): the
-        // Hadoop local create path costs ~33 ms/file without the native
-        // library vs ~0.1 ms raw NIO on the same tmpfs (CkptIoProbe),
-        // and every micro-batch commits several files (offset WAL,
-        // commit log, state deltas) — the dominant share of the gates'
-        // addBatch floor. Local-only; a real HDFS/S3 deployment keeps
-        // the stock manager by not setting this.
-        // GRAFT_CKPT_FM=default restores the stock manager for A/B.
-        if (!sys.env.get("GRAFT_CKPT_FM").contains("default"))
-          s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
-            "org.apache.spark.sql.execution.streaming.graft.GraftLocalCheckpointFileManager")
-        // Spark 4.1 wraps every checkpoint manager in
-        // ChecksumCheckpointFileManager by default: each commit file
-        // (offset WAL, commit log, state deltas) gains a `.checksum`
-        // sibling — doubling the per-batch file creates — and every
-        // read first probes for one. Checksums guard against storage
-        // bit-rot on long-lived remote checkpoints; these gates'
-        // checkpoints are per-run scratch on local tmpfs, deleted
-        // minutes later, so the tax buys nothing here. Local-only, same
-        // scope as the NIO manager above. GRAFT_CKPT_CRC=on for A/B.
-        if (!sys.env.get("GRAFT_CKPT_CRC").contains("on"))
-          s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
-            "false")
-        // State-store provider is switchable for measurement
-        // (GRAFT_STATESTORE=rocksdb): Spark 4 ships RocksDBStateStoreProvider
-        // to cut the HDFS-backed store's per-commit cost at LARGE state.
-        // Measured on the ten gates at sf0.1 (README "Design choices"):
-        // these fixtures keep ≤ a few thousand rows of state, where
-        // RocksDB's per-store native init outweighs its commit savings —
-        // HDFS-backed (default) wins on every gate, so it stays the
-        // default and production-scale state is where rocksdb earns
-        // the flip.
-        sys.env.get("GRAFT_STATESTORE").foreach {
-          case "rocksdb" => s.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-          case _ => ()
-        }
+        // 1, not one per core: fixture micro-batches are small, so
+        // per-partition state-store commits dominate (4 measured
+        // net-slower across the gates; re-measured optimal after the
+        // NIO checkpoint manager, dcd8717). Production sizes by cores;
+        // results are partition-count-independent.
+        s.conf.set("spark.sql.shuffle.partitions", "1")
+        // NIO atomic checkpoint writes: the Hadoop local create path
+        // costs ~33 ms/file vs ~0.1 ms NIO; walCommit 32 → 0–1 ms per
+        // batch (OPTIMIZATION_r18 finding 2). Local checkpoints only.
+        s.conf.set("spark.sql.streaming.checkpointFileManagerClass",
+          "org.apache.spark.sql.execution.streaming.graft.GraftLocalCheckpointFileManager")
+        // No `.checksum` siblings on per-run local scratch: checksums
+        // doubled the commit-file creates (4-gate A/B: addBatch
+        // ~0.5–0.7 s off vs ~1.1–1.5 s on, 01f577b).
+        s.conf.set("spark.sql.streaming.checkpoint.fileChecksum.enabled",
+          "false")
+        // The state store stays the HDFS-backed default: at these
+        // fixtures' few thousand state rows RocksDB's per-store native
+        // init lost on every gate (OPTIMIZATION_r18, streaming floor).
+
         // diagnostics lever: per-micro-batch duration breakdown on
         // stderr (GRAFT_STREAM_PROGRESS=1) — attributes gate cost to
         // planning/state-commit/sink phases without a full profiler
@@ -828,23 +796,18 @@ object AnalyticsQueries {
     withStreamSession(spark)(identity)
 
   /** Terminal sink for a stream gate: run the streaming frame to
-    * completion under AvailableNow and return the emitted rows. Default
-    * is the MEMORY sink: a gate's evidence is its stateful semantics —
+    * completion under AvailableNow and return the emitted rows from the
+    * MEMORY sink. A gate's evidence is its stateful semantics —
     * watermarks, state merge, emission contract — which are
     * sink-agnostic, while the parquet file-sink pays a per-micro-batch
     * file materialization + exactly-once metadata-log commit that is
     * pure harness overhead at fixture size (gate outputs are hundreds
     * of rows, so the sink's driver-side table is node-sized by design).
-    * `GRAFT_STREAM_SINK=parquet` flips every gate back to the
-    * production file sink in one env var (the stream≡batch hashes are
-    * sink-independent — same rows either way). The one stream whose
-    * sink IS its evidence — [[graft.streaming.StreamingIngest]]'s
-    * foreachBatch idempotent partition-overwrite — is not a gate and
-    * does not route through here; StreamingSpec's idempotent-ingest
-    * test keeps that file-sink path exercised in CI either way.
-    * (An earlier revision of this note wrongly attributed the
-    * foreachBatch sink to the cdc_merge GATE; that gate sinks like
-    * every other.)
+    * The one stream whose sink IS its evidence —
+    * [[graft.streaming.StreamingIngest]]'s foreachBatch idempotent
+    * partition-overwrite — is not a gate and does not route through
+    * here; StreamingSpec's idempotent-ingest test keeps that file-sink
+    * path exercised in CI.
     */
   private val gateSeq = new java.util.concurrent.atomic.AtomicInteger
   /** Postfix form so each gate's stream chain ends `.gateSink(ss, work)`
@@ -856,26 +819,19 @@ object AnalyticsQueries {
   }
   private def gateSink(ss: SparkSession, df: DataFrame,
       work: String): DataFrame = {
-    val w = df.writeStream
+    val qn = s"gate_sink_${gateSeq.incrementAndGet()}"
+    df.writeStream
       .option("checkpointLocation", s"$work/cp")
       .outputMode("append")
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-    if (sys.env.get("GRAFT_STREAM_SINK").contains("parquet")) {
-      w.format("parquet").option("path", s"$work/out")
-        .start().awaitTermination()
-      ss.read.parquet(s"$work/out")
-    } else {
-      val qn = s"gate_sink_${gateSeq.incrementAndGet()}"
-      w.format("memory").queryName(qn).start().awaitTermination()
-      // the gate's rows now live in the in-memory sink table; the
-      // checkpoint is a COMPLETED AvailableNow run's scratch. Delete it
-      // so repeated gate calls (bench warmup + two timed passes, memo-
-      // discarded artifact rebuilds) don't accumulate orphan temp dirs
-      // for the life of the session (round-16 advice item). The parquet
-      // path above keeps `work` — its output lives under it.
-      deleteRecursively(new java.io.File(work))
-      ss.table(qn)
-    }
+      .format("memory").queryName(qn).start().awaitTermination()
+    // the gate's rows now live in the in-memory sink table; the
+    // checkpoint is a COMPLETED AvailableNow run's scratch. Delete it
+    // so repeated gate calls (bench warmup + two timed passes, memo-
+    // discarded artifact rebuilds) don't accumulate orphan temp dirs
+    // for the life of the session
+    deleteRecursively(new java.io.File(work))
+    ss.table(qn)
   }
 
   private def deleteRecursively(f: java.io.File): Unit = {

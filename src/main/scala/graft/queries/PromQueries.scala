@@ -1365,13 +1365,35 @@ object PromQueries {
          |         sum(CAST(v AS DECIMAL(20,6))) AS sv,
          |         sum(CAST(v AS DECIMAL(20,6)) * (e - $x0)) AS sxv
          |  FROM s GROUP BY u, k
-         |), sl AS (
-         |  SELECT u, k, n, sx, sv,
-         |         CAST(n * sxv - sx * sv AS DOUBLE)
-         |           / CAST(n * sxx - sx * sx AS DOUBLE) AS slope
-         |  FROM a WHERE n * sxx - sx * sx > 0
-         |)""".stripMargin
+         |)""".stripMargin + slopeCte("u, k")
   }
+
+  /** DECIMAL → DOUBLE in the oracle, correctly rounded. DuckDB 1.0's
+    * direct `CAST(DECIMAL(38,6) AS DOUBLE)` is off by an ulp on about a
+    * quarter of random values (Spark's cast is exact), which broke the
+    * bit-exact compare on dense series; the decimal's text form parses
+    * to the nearest double.
+    */
+  private def toDouble(dec: String): String =
+    s"CAST(CAST($dec AS VARCHAR) AS DOUBLE)"
+
+  /** The least-squares slope over the regression sums CTE `a`, in the
+    * operation order of [[graft.promql.PromOps.derivFromSamples]].
+    */
+  private def slopeCte(keys: String): String =
+    s"""
+       |, sl AS (
+       |  SELECT $keys, n, sx, sv,
+       |         ${toDouble("n * sxv - sx * sv")}
+       |           / ${toDouble("n * sxx - sx * sx")} AS slope
+       |  FROM a WHERE n * sxx - sx * sx > 0
+       |)""".stripMargin
+
+  /** predict_linear's affine step: intercept at the window start, then
+    * the slope extrapolated `horizon` seconds past it.
+    */
+  private def predictValue(horizon: Double): String =
+    s"(${toDouble("sv")} - slope * ${toDouble("sx")}) / n + slope * $horizon"
 
   val parsedDerivOracle: String = derivCte("view") +
     "\nSELECT u AS user, k, slope AS value FROM sl"
@@ -1388,11 +1410,7 @@ object PromQueries {
   }
 
   val parsedPredictOracle: String = derivCte("signup") +
-    """
-      |SELECT u AS user, k,
-      |       (CAST(sv AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / n
-      |         + slope * 2595600.0 AS value
-      |FROM sl""".stripMargin
+    s"\nSELECT u AS user, k, ${predictValue(2595600.0)} AS value FROM sl"
 
   /** Parsed `resets(purchase[720h])` + `changes(error[720h])` — exact
     * integer counts of counter resets / value changes between
@@ -2471,16 +2489,8 @@ object PromQueries {
          |         sum(CAST(v AS DECIMAL(20,6))) AS sv,
          |         sum(CAST(v AS DECIMAL(20,6)) * (g - $x0)) AS sxv
          |  FROM c GROUP BY u
-         |), sl AS (
-         |  SELECT u, n, sx, sv,
-         |         CAST(n * sxv - sx * sv AS DOUBLE)
-         |           / CAST(n * sxx - sx * sx AS DOUBLE) AS slope
-         |  FROM a WHERE n * sxx - sx * sx > 0
-         |)
-         |SELECT u AS user,
-         |       (CAST(sv AS DOUBLE) - slope * CAST(sx AS DOUBLE)) / n
-         |         + slope * 262800.0 AS value
-         |FROM sl""".stripMargin
+         |)""".stripMargin + slopeCte("u") +
+      s"\nSELECT u AS user, ${predictValue(262800.0)} AS value FROM sl"
   }
 
   /** name → (query fn, oracle SQL). Every entry is a PURE plan builder

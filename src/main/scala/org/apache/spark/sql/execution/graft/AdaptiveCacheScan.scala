@@ -19,7 +19,7 @@ import org.apache.spark.sql.vectorized.ColumnarBatch
   * never reuses one for the other (measured: a duplicated
   * aggregate-join over a `.persist()`ed frame executes BOTH copies with
   * AQE on, while plain `ReuseExchangeAndSubquery` dedupes the same plan
-  * with AQE off — ReuseProbe2). This engine serves every query from
+  * with AQE off — pinned in AdaptiveReuseSpec). This engine serves every query from
   * session-cached artifacts, so each repeated-selector PromQL
   * expression re-paid its duplicate sub-plan in full.
   *
@@ -78,15 +78,11 @@ case class GraftCachedScanExec(delegate: InMemoryTableScanExec)
 /** Injected via `SparkSessionExtensions.injectQueryStagePrepRule`; runs
   * on the physical plan before AQE creates query stages (and on every
   * re-optimized plan — hence idempotent by construction: the transform
-  * only matches bare scans). `GRAFT_CACHED_SCAN_WRAP=off` disables it
-  * for A/B measurement.
+  * only matches bare scans). Always on: pack-wide A/B against the bare
+  * scan measured 60.85 s vs 67.91 s (OPTIMIZATION_r18 finding 1).
   */
 case class GraftWrapCachedScans() extends Rule[SparkPlan] {
-  private val enabled =
-    !sys.env.get("GRAFT_CACHED_SCAN_WRAP").contains("off")
-  override def apply(plan: SparkPlan): SparkPlan =
-    if (!enabled) plan
-    else plan.transformUp {
-      case i: InMemoryTableScanExec => GraftCachedScanExec(i)
-    }
+  override def apply(plan: SparkPlan): SparkPlan = plan.transformUp {
+    case i: InMemoryTableScanExec => GraftCachedScanExec(i)
+  }
 }

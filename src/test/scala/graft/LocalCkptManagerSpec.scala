@@ -62,6 +62,13 @@ class LocalCkptManagerSpec extends SparkSpec {
     // parent conf does NOT carry it: the opt-in is scoped to the gates
     assert(!spark.sparkContext.getConf
       .contains("spark.sql.streaming.checkpointFileManagerClass"))
+    // the rest of the gates' fixed conf: one state partition, no
+    // checkpoint checksums, and the default (HDFS-backed) state store
+    assert(ss.conf.get("spark.sql.shuffle.partitions") == "1")
+    assert(ss.conf.get(
+      "spark.sql.streaming.checkpoint.fileChecksum.enabled") == "false")
+    assert(!ss.conf.getOption("spark.sql.streaming.stateStore.providerClass")
+      .exists(_.contains("RocksDB")))
     // and a gate runs green end-to-end under that manager (checkpoint
     // written + read back), so the class name is load-bearing, not
     // just present

@@ -89,4 +89,54 @@ class PromOpsSpec extends SparkSpec {
       .head().getMap[String, String](0)
     assert(back == Map("a" -> "1", "b" -> "2"))
   }
+
+  /** The double nearest to `x`, checked against both neighbours in exact
+    * decimal arithmetic rather than trusted to a library conversion.
+    */
+  private def nearest(x: BigDecimal): Double = {
+    val d = x.toDouble
+    def dist(c: Double) = (BigDecimal(new java.math.BigDecimal(c)) - x).abs
+    assert(dist(d) <= dist(Math.nextUp(d)) && dist(d) <= dist(Math.nextDown(d)),
+      s"$x does not convert to its nearest double")
+    d
+  }
+
+  test("deriv slope is the exact regression quotient on dense series") {
+    // 20 trending series × 2000 samples 15 s apart, 6-decimal values up
+    // to 10^4: the numerator n·Σxv − Σx·Σv runs past 18 significant
+    // digits, where a DECIMAL(38,6) → DOUBLE conversion that is not
+    // correctly rounded shows up in the last bit
+    val at = 100000L
+    val window = 30000L
+    val n = 2000
+    val rnd = new scala.util.Random(201)
+    val units = Seq.tabulate(20, n)((s, i) =>
+      (s + 10) * 150000L * i + rnd.nextLong(1000000000L))
+    val rows = for {
+      (ks, s) <- units.zipWithIndex
+      (k, i) <- ks.zipWithIndex
+    } yield ("m", Map("s" -> s.toString), k / 1e6, at - window + 15L * (i + 1))
+    val df = rows.toDF("metric_name", "labels", "value", "es")
+      .withColumn("timestamp", timestamp_seconds(col("es")))
+    val got = PromOps.derivOverRange(df, "m", at, window, None)
+      .select(PromOps.labelsOf(col("skey"))("s"), col("value")).collect()
+      .map(r => r.getString(0).toInt -> r.getDouble(1)).toMap
+    assert(got.size == 20)
+    val xs = (1 to n).map(i => BigInt(15L * i))
+    val sx = xs.sum
+    val sxx = xs.map(x => x * x).sum
+    for ((ks, s) <- units.zipWithIndex) {
+      val vs = ks.map(BigInt(_))
+      val num = BigDecimal(BigInt(n) * vs.zip(xs).map { case (v, x) => v * x }.sum -
+        sx * vs.sum, 6)
+      val den = BigDecimal(BigInt(n) * sxx - sx * sx)
+      assert(num.precision > 18, s"series $s: numerator $num too short")
+      val want = nearest(num) / nearest(den)
+      assert(got(s) == want, s"series $s: slope ${got(s)} != $want")
+      // and within one ulp of the true rational slope
+      val exact = num / den
+      assert((BigDecimal(new java.math.BigDecimal(got(s))) - exact).abs <=
+        BigDecimal(Math.ulp(got(s))))
+    }
+  }
 }

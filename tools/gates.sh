@@ -6,6 +6,12 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Size to this box the way the Tier-1 run does: every core, and a driver
+# heap of half the RAM clamped to 2-8 GiB (build.sbt's 16g default
+# assumes a 128 GiB box).
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)"
+
 # Soft ceiling on the full-pack total: a GROSS-regression tripwire, not
 # a guarantee of the official gate. After the round-13 AQE
 # small-shuffle fix (minPartitionSize 64k) standalone full-pack samples
@@ -37,7 +43,7 @@ load_evidence() {
 }
 run_bench() {
   load_evidence "bench-pre"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     sbt -batch "runMain graft.Bench" | grep -F '"metric"' | tee /tmp/graft_gate_bench.json
   load_evidence "bench-post"
   # --strict-keys: fail (exit 4) when the registered query set differs

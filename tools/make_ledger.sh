@@ -13,11 +13,17 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# Size to this box the way the Tier-1 run does: every core, and a driver
+# heap of half the RAM clamped to 2-8 GiB (build.sbt's 16g default
+# assumes a 128 GiB box).
+export SPARK_GRAFT_CPUS="$(env -u OMP_NUM_THREADS nproc)"
+export SPARK_DRIVER_MEM="$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)"
+
 runs="${1:-3}"
 tmp=$(mktemp -d /tmp/graft_ledger.XXXXXX)
 for i in $(seq 1 "$runs"); do
   echo "== ledger bench run $i/$runs"
-  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 SPARK_GRAFT_CPUS=32 \
+  SPARK_GRAFT_SF_DIR=/root/testdata/sf0.1 \
     sbt -batch "runMain graft.Bench" | grep -F '"metric"' | tail -1
   cp BENCH_FULL.json "$tmp/bench_$i.json"
 done
